@@ -1519,81 +1519,10 @@ def oracle_sql() -> dict[str, str]:
             FROM tbls
         """,
         "j3_tables_merged": f"""
-            WITH {_TABLES_CTE},
-            marked AS (
-              SELECT *,
-                contains(lower(title), 'continued') AS is_cont,
-                CASE WHEN contains(lower(title), 'continued')
-                     THEN trim(split_part(title, '(', 1)) ELSE title END AS base_title
-              FROM tbls),
-            tbllvl AS (
-              -- header arity from the lowest non-negative row_id (works
-              -- for 1-based SQL-path and 0-based exact-path row ids)
-              SELECT doc_id, page_id, table_id, title, base_title, is_cont,
-                     arg_min(len(cells),
-                             CASE WHEN row_id >= 0 THEN row_id END) AS n_cols
-              FROM marked
-              GROUP BY doc_id, page_id, table_id, title, base_title, is_cont),
-            orded AS (
-              SELECT *, row_number() OVER (PARTITION BY doc_id
-                                           ORDER BY page_id, table_id) AS tord
-              FROM tbllvl),
-            anch AS (
-              -- anchor = last NON-continued table at or before (the
-              -- reference's current_table stays the base after a merge,
-              -- so 3+-page chains merge fully)
-              SELECT *,
-                last_value(CASE WHEN NOT is_cont THEN tord END IGNORE NULLS)
-                  OVER wrun AS anchor_tord,
-                last_value(CASE WHEN NOT is_cont THEN title END IGNORE NULLS)
-                  OVER wrun AS anchor_title,
-                last_value(CASE WHEN NOT is_cont THEN n_cols END IGNORE NULLS)
-                  OVER wrun AS anchor_cols
-              FROM orded
-              WINDOW wrun AS (PARTITION BY doc_id ORDER BY tord
-                              ROWS UNBOUNDED PRECEDING)),
-            badc AS (
-              SELECT *,
-                (is_cont AND (anchor_tord IS NULL
-                              OR lower(anchor_title) <> lower(base_title)))
-                  AS title_bad
-              FROM anch),
-            grp AS (
-              SELECT *, min(CASE WHEN title_bad THEN tord END)
-                          OVER (PARTITION BY doc_id, anchor_tord) AS first_bad
-              FROM badc),
-            decided AS (
-              SELECT *,
-                (is_cont AND NOT title_bad
-                 AND (first_bad IS NULL OR tord < first_bad)
-                 AND anchor_cols IS NOT DISTINCT FROM n_cols) AS merged
-              FROM grp),
-            mids AS (
-              SELECT *,
-                CASE WHEN merged THEN anchor_tord ELSE tord END AS grp_tord,
-                CASE WHEN merged THEN anchor_title ELSE title END AS out_title
-              FROM decided),
-            dense AS (
-              SELECT *, dense_rank() OVER (PARTITION BY doc_id
-                                           ORDER BY grp_tord) AS merged_id
-              FROM mids),
-            keyed AS (
-              -- no row_id=-1 marker handling here: the SQL
-              -- reconstruction feeding this oracle drops empty tables
-              -- entirely (title rows are filtered, no data rows), so
-              -- markers cannot occur in this input; the engine's
-              -- marker-preserving branch is pytest-pinned instead
-              SELECT m.doc_id, i.merged_id, i.out_title, m.page_id,
-                     m.table_id, m.row_id, m.cells
-              FROM marked m JOIN dense i
-                   USING (doc_id, page_id, table_id))
-            SELECT doc_id, CAST(merged_id AS INT) AS table_id,
-                   out_title AS title,
-                   CAST(row_number() OVER wm AS INT) AS row_id,
+            WITH {_TABLES_CTE}, {OP.merge_tables_sql("tbls")}
+            SELECT doc_id, table_id, title, row_id,
                    array_to_string(cells, '|') AS cells
-            FROM keyed
-            WINDOW wm AS (PARTITION BY doc_id, merged_id
-                          ORDER BY page_id, table_id, row_id)
+            FROM merged
         """,
         "j2_table_titles": f"""
             WITH el AS (SELECT * FROM read_parquet('{FIX01}/elements.parquet')),

@@ -118,88 +118,6 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
     return run
 
 
-def _arrow_schema(spark_schema: T.StructType):
-    """Declared StructType -> the pyarrow schema Spark expects from a
-    mapInArrow function (names and types must match exactly)."""
-    import pyarrow as pa
-
-    def conv(dt):
-        if isinstance(dt, T.StringType):
-            return pa.string()
-        if isinstance(dt, T.IntegerType):
-            return pa.int32()
-        if isinstance(dt, T.LongType):
-            return pa.int64()
-        if isinstance(dt, T.DoubleType):
-            return pa.float64()
-        if isinstance(dt, T.ArrayType):
-            return pa.list_(conv(dt.elementType))
-        if isinstance(dt, T.StructType):
-            return pa.struct([(f.name, conv(f.dataType))
-                              for f in dt.fields])
-        raise TypeError(f"unmapped type {dt}")
-
-    return pa.schema([(f.name, conv(f.dataType))
-                      for f in spark_schema.fields])
-
-
-def _fold_batches_arrow(cfg: ExtractConfig, spans_only: bool = False):
-    """Arrow-native twin of _fold_batches for mapInArrow — kept as a
-    MEASURED NEGATIVE RESULT, not the production path. A zero-compute
-    mapInPandas passthrough costs 2.3x a mapInArrow one (6.1 s vs
-    2.7 s at local[8], K=48), which suggested deleting the pandas
-    layer; but the REAL fold interleaved A/B (same session, min-of-3,
-    full scaling job) came out pandas 8.9 s vs arrow 11.2 s. The
-    passthrough's win is pure zero-copy IPC; once the fold must
-    materialize every span as a Python dict anyway, `to_pylist()` +
-    `pa.array(list-of-dicts)` rebuild costs MORE than pyspark's tuned
-    pandas conversion paths. Production stays on _fold_batches; this
-    twin is parity-pinned (test_fold_arrow_twin_matches_pandas) so
-    the A/B can be rerun against future pyarrow versions in one
-    line."""
-    schema = EXTRACT_SPANS_ONLY if spans_only else EXTRACT_FULL
-
-    def run(batches):
-        import pyarrow as pa
-
-        from pyspark import TaskContext
-
-        pa_schema = _arrow_schema(schema)
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for b in batches:
-            names = b.schema.names
-            doc_ids = b.column(names.index("doc_id")).to_pylist()
-            spans_col = b.column(names.index("spans")).to_pylist()
-            headers = b.column(names.index("header")).to_pylist()
-            footers = b.column(names.index("footer")).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema.fields}
-            for doc_id, spans, header, footer in zip(
-                    doc_ids, spans_col, headers, footers):
-                t0 = time.perf_counter()
-                spans = spans if spans is not None else []
-                res = fold_document(spans, header or "", footer or "",
-                                    cfg, skip_sections=spans_only)
-                cols["doc_id"].append(doc_id)
-                cols["status"].append(res["status"])
-                cols["spans"].append(res["out_spans"])
-                cols["spans_in"].append(res["spans_in"])
-                cols["spans_out"].append(res["spans_out"])
-                cols["bytes_in"].append(
-                    sum(len(s["text"] or "") for s in spans))
-                cols["partition_id"].append(pid)
-                cols["wall_ms"].append(
-                    (time.perf_counter() - t0) * 1000.0)
-                if not spans_only:
-                    cols["sections"].append(res["sections"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=pa_schema.field(i).type)
-                 for i, f in enumerate(schema.fields)],
-                schema=pa_schema,
-            )
-
-    return run
-
-
 def extract_documents(
     documents_in: DataFrame,
     header_footer_df: DataFrame | None = None,

@@ -6,9 +6,13 @@ Here that is a per-(doc,page) window; no global shuffle of anything
 but the (doc_id, page_id) hash.
 """
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pdfspark.udf import map_groups
 
 
 def reading_order_window(per_page: bool = True) -> Window:
@@ -62,7 +66,7 @@ def xy_cut_order(x0, y0, x1, y1, offset) -> list:
     sort (parse_util.py:454, offset tie-break = Python stable sort).
 
     Pure Python over one page (pages are tens-to-hundreds of boxes;
-    the distributed form batches pages per Arrow group via
+    the distributed form batches pages per Arrow batch via
     ``with_xy_cut_order``). Inputs are parallel sequences; returns
     input INDICES in reading order.
 
@@ -100,32 +104,20 @@ def with_xy_cut_order(spans_geom: DataFrame,
     TextBox spans of every page.
 
     One shuffle on (doc_id, page_id) — the same exchange the W1
-    window pays — as an explicit repartition + partition-local sort,
-    then ONE mapInPandas whose batches carry MANY pages: page-group
-    boundaries are numpy change-points over the sorted keys, sliced
-    in-process. The first cut of this op (groupBy.applyInPandas) made
-    every page its own Arrow group — ~60k single-page groups at
-    sf0.1, each paying per-group Arrow + invocation overhead, 37 s vs
-    0.35 s for the flat sort (measured, round 5). Batching pages per
-    Arrow batch removes that overhead class entirely (37 s -> ~1 s)
-    and is the shape that scales: cost tracks page COUNT, not group
-    count. A page group can straddle two Arrow batches of one
-    partition, so the trailing group of every batch is buffered and
-    prepended to the next (flushed at iterator end) — never split,
-    because the partition-local sort made groups contiguous."""
-    import numpy as np
-    import pandas as pd
-
+    window pays — then ``map_groups`` hands the kernel MANY whole
+    pages per Arrow batch. The first cut of this op
+    (groupBy.applyInPandas) made every page its own Arrow group —
+    ~60k single-page groups at sf0.1, each paying per-group Arrow +
+    invocation overhead, 37 s vs 0.35 s for the flat sort (measured,
+    round 5). Batching pages per Arrow batch removes that overhead
+    class entirely (37 s -> ~1 s) and is the shape that scales: cost
+    tracks page COUNT, not group count."""
     tb = spans_geom.filter(F.col("kind") == "TextBox").select(
         "doc_id", "page_id", "offset", "x0", "y0", "x1", "y1")
-    part = tb.repartition("doc_id", "page_id").sortWithinPartitions(
-        "doc_id", "page_id")
 
-    def _rank_pages(pdf: pd.DataFrame) -> pd.DataFrame:
+    def rank_pages(pdf, starts):
         d = pdf["doc_id"].to_numpy()
         p = pdf["page_id"].to_numpy()
-        change = np.flatnonzero((d[1:] != d[:-1]) | (p[1:] != p[:-1])) + 1
-        bounds = np.concatenate(([0], change, [len(pdf)]))
         x0 = pdf["x0"].to_numpy()
         y0 = pdf["y0"].to_numpy()
         x1 = pdf["x1"].to_numpy()
@@ -133,8 +125,7 @@ def with_xy_cut_order(spans_geom: DataFrame,
         off = pdf["offset"].to_numpy()
         take: list[int] = []
         rord = np.empty(len(pdf), dtype=np.int32)
-        pos = 0
-        for lo, hi in zip(bounds[:-1], bounds[1:]):
+        for lo, hi in zip(starts[:-1], starts[1:]):
             # .tolist() once per page: the kernel indexes elements in
             # Python loops, and plain-list indexing avoids the ~100 ns
             # numpy scalar boxing per access (measurable at sf0.1)
@@ -142,33 +133,11 @@ def with_xy_cut_order(spans_geom: DataFrame,
                                  x1[lo:hi].tolist(), y1[lo:hi].tolist(),
                                  off[lo:hi].tolist())
             take.extend(lo + j for j in order)
-            rord[pos:pos + (hi - lo)] = np.arange(1, hi - lo + 1)
-            pos += hi - lo
-        out = pd.DataFrame(
+            rord[lo:hi] = np.arange(1, hi - lo + 1)
+        return pd.DataFrame(
             {"doc_id": d[take], "page_id": p[take], "offset": off[take],
              col_name: rord}
         )
-        return out
-
-    def run(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last_d = pdf["doc_id"].iloc[-1]
-            last_p = pdf["page_id"].iloc[-1]
-            tail = (pdf["doc_id"].to_numpy() == last_d) & (
-                pdf["page_id"].to_numpy() == last_p)
-            n_tail = int(tail[::-1].argmin()) if not tail.all() else len(pdf)
-            pending = pdf.iloc[len(pdf) - n_tail:].reset_index(drop=True)
-            head = pdf.iloc[: len(pdf) - n_tail]
-            if len(head):
-                yield _rank_pages(head)
-        if pending is not None and len(pending):
-            yield _rank_pages(pending)
 
     # key-column types come from the INPUT frame (bigint doc_ids,
     # long offsets, ...) — a hardcoded string/int schema would fail
@@ -177,4 +146,5 @@ def with_xy_cut_order(spans_geom: DataFrame,
         [T.StructField(n, spans_geom.schema[n].dataType)
          for n in ("doc_id", "page_id", "offset")]
         + [T.StructField(col_name, T.IntegerType())])
-    return part.mapInPandas(run, out_schema)
+    return map_groups(tb, ["doc_id", "page_id"], ["offset"], rank_pages,
+                      out_schema)

@@ -3,10 +3,10 @@
 
 Two implementations:
 
-* ``extract_tables_exact`` — ``applyInPandas`` per (doc_id, page_id)
-  reproducing the reference fold *verbatim*, including its quirks
-  (stale row anchor after titles, pre-title row leaking into the first
-  table, empty-row emission): ref src/table_extractor.py:185-222
+* ``extract_tables_exact`` — reproduces the reference fold *verbatim*
+  per (doc_id, page_id), including its quirks (stale row anchor after
+  titles, pre-title row leaking into the first table, empty-row
+  emission): ref src/table_extractor.py:185-222
   (extract_table_content) then :9-117 (textboxes_to_tabular_json).
   This is the parity path, checked span-for-span by pytest against the
   pure-Python oracle.
@@ -16,8 +16,15 @@ Two implementations:
   no leaks). 100% Catalyst: window + groupBy, zero Python. This is
   the path the DuckDB oracle checks and the one benchmarked at scale.
 
-Shuffle story: both paths shuffle once on (doc_id) — the window /
-applyInPandas grouping key prefix — then aggregate map-side.
+``merge_continued_tables`` (J3) then folds '(continued)' fragments
+into their base table in one sequential pass per document.
+
+Shuffle story: the SQL path shuffles once on (doc_id) — the window
+key prefix — then aggregates map-side. The exact fold and the merge
+each shuffle once on their group key ((doc_id, page_id), resp.
+doc_id) and sort inside the partition; ``pdfspark.udf.map_groups``
+then hands Python many whole pages (documents) per Arrow batch
+instead of one ``applyInPandas`` group per page.
 """
 
 from __future__ import annotations
@@ -32,6 +39,7 @@ from pyspark.sql import types as T
 from pdfspark.config import Y_TOLERANCE
 from pdfspark.functions import patterns as P
 from pdfspark.operators.reading_order import with_reading_order
+from pdfspark.udf import map_groups
 
 TABLE_ROWS_SCHEMA = T.StructType(
     [
@@ -143,33 +151,34 @@ def extract_tables_exact(
     header_footer_df: DataFrame,
     y_tolerance: float = Y_TOLERANCE,
 ) -> DataFrame:
-    """Parity path: applyInPandas fold per (doc_id, page_id)."""
-    tb = with_reading_order(spans_geom).select(
-        "doc_id", "page_id", "text", "x0", "y0", "x1", "y1", "rord"
+    """Parity path: ``fold_tables_page`` per (doc_id, page_id), pages
+    in reading order (the W1 window's ``y1 DESC, x1, offset``) and
+    batched many per Arrow batch through ``map_groups``."""
+    tb = spans_geom.filter(F.col("kind") == "TextBox").select(
+        "doc_id", "page_id", "offset", "text", "x0", "y0", "x1", "y1"
     )
     joined = tb.join(header_footer_df, "doc_id", "left").fillna(
         {"header": "", "footer": ""}
     )
+    cols = [f.name for f in TABLE_ROWS_SCHEMA.fields]
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rord")
-        header = pdf["header"].iloc[0] or ""
-        footer = pdf["footer"].iloc[0] or ""
+    def fold_pages(pdf: pd.DataFrame, starts) -> pd.DataFrame:
+        doc, page = pdf["doc_id"].tolist(), pdf["page_id"].tolist()
+        header, footer = pdf["header"].tolist(), pdf["footer"].tolist()
         boxes = pdf[["text", "x0", "y0", "x1", "y1"]].to_dict("records")
-        rows = fold_tables_page(boxes, header, footer, y_tolerance)
-        return pd.DataFrame(
-            [
-                dict(
-                    doc_id=pdf["doc_id"].iloc[0],
-                    page_id=int(pdf["page_id"].iloc[0]),
-                    **r,
-                )
-                for r in rows
-            ],
-            columns=[f.name for f in TABLE_ROWS_SCHEMA.fields],
-        )
+        out = []
+        for lo, hi in zip(starts[:-1], starts[1:]):
+            rows = fold_tables_page(boxes[lo:hi], header[lo] or "",
+                                    footer[lo] or "", y_tolerance)
+            out.extend((doc[lo], page[lo], r["table_id"], r["title"],
+                        r["row_id"], r["cells"]) for r in rows)
+        return pd.DataFrame(out, columns=cols)
 
-    return joined.groupBy("doc_id", "page_id").applyInPandas(run, TABLE_ROWS_SCHEMA)
+    return map_groups(
+        joined, ["doc_id", "page_id"],
+        [F.desc("y1"), F.asc("x1"), F.asc("offset")],
+        fold_pages, TABLE_ROWS_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -291,24 +300,82 @@ def extract_tables_sql(
     return out.select("doc_id", "page_id", "table_id", "title", "row_id", "cells")
 
 
-def merge_continued_tables(tables: DataFrame, cache_input: bool = True,
+
+
+def _merge_doc(page: list, tid: list, title: list, rid: list, cells: list,
+               lo: int, hi: int, drop_mismatched: bool):
+    """The reference's sequential merge over ONE document's rows
+    ``lo:hi`` (sorted by page_id, table_id, row_id). Yields
+    (row index, merged table id, merged title, row id)."""
+    groups: list[tuple] = []  # (title, row indices) per output table
+    anchor = None  # (title, group index) of the last non-continued table
+    anchor_cols = None
+    bad = False  # a title mismatch was seen since the anchor
+    a = lo
+    while a < hi:
+        b = a + 1
+        while b < hi and page[b] == page[a] and tid[b] == tid[a]:
+            b += 1
+        rows = range(a, b)
+        t = title[a]
+        head = next((i for i in rows if rid[i] is not None and rid[i] >= 0),
+                    None)
+        n_cols = (None if head is None or cells[head] is None
+                  else len(cells[head]))
+        a = b
+        # literal 'continued' ON PURPOSE, not the X7 (continued|cont\.)
+        # pattern: the reference's merge stage tests
+        # `'continued' in title.lower()` (parse_util.py:329) while only
+        # the fold stage uses the X7 regex (table_extractor.py:52) — a
+        # 'cont.' fragment genuinely does not merge in the reference
+        is_cont = t is not None and "continued" in t.lower()
+        if t is not None and not is_cont:
+            anchor, bad = (t, len(groups)), False
+            if n_cols is not None:
+                anchor_cols = n_cols
+        elif is_cont:
+            base = t.split("(")[0].strip(" ")
+            bad = bad or anchor is None or anchor[0].lower() != base.lower()
+            if not bad:
+                if n_cols == anchor_cols:
+                    groups[anchor[1]][1].extend(rows)
+                    continue
+                if drop_mismatched:
+                    continue
+        groups.append((t, list(rows)))
+
+    for gid, (g_title, g_rows) in enumerate(groups, start=1):
+        real = [i for i in g_rows if rid[i] is not None and rid[i] >= 0]
+        if real:
+            for n, i in enumerate(real, start=1):
+                yield i, gid, g_title, n
+        else:
+            i = g_rows[0]
+            yield i, gid, g_title, 1 if rid[i] is None else -1
+
+
+def merge_continued_tables(tables: DataFrame,
                            drop_mismatched: bool = False) -> DataFrame:
-    """J3 v3 — merge '(continued)' tables into their BASE table
+    """J3 — merge '(continued)' tables into their BASE table
     (ref src/utilities/parse_util.py:327-345: base =
     title.split('(')[0].strip(); current_table's title must equal
     base, case-insensitive; column arity must match).
 
+    Shape: one shuffle on doc_id, rows sorted by (page_id, table_id,
+    row_id) inside the partition, then one sequential pass per
+    document in Python (``map_groups``, many documents per Arrow
+    batch) — the reference's own loop over a document's tables.
+
     The reference keeps ``current_table`` pointing at the BASE after a
-    merge, so a table continued across 3+ pages merges fully — a naive
-    lag(title) comparison breaks the chain at the third fragment
-    (fragment 3's predecessor title still contains '(continued)').
-    State machine, made relational: the anchor of a fragment is the
-    last NON-continued table before it; a fragment whose base differs
-    from the anchor's title becomes standalone (reference: appended +
-    becomes current_table), and because its raw title contains '(' no
-    later base can ever match it, every following fragment in the
-    anchor group is standalone too — hence "standalone from the first
-    title mismatch onward", a per-group aggregate, no recursion.
+    merge, so a table continued across 3+ pages merges fully: the
+    anchor of a fragment is the last NON-continued table before it. A
+    fragment whose base differs from the anchor's title becomes
+    standalone (reference: appended + becomes current_table), and
+    because its raw title contains '(' no later base can ever match
+    it, every following fragment up to the next anchor is standalone
+    too. The anchor's arity is the header arity of the last
+    non-continued table that has one (an empty anchor keeps the
+    previous anchor's arity); two empty sides match.
 
     ``drop_mismatched``: the reference silently DISCARDS a title-
     matching fragment whose arity differs (parse_util.py:336-337 logs
@@ -316,132 +383,39 @@ def merge_continued_tables(tables: DataFrame, cache_input: bool = True,
     standalone tables — a deliberate, documented deviation (don't
     silently lose rows); True reproduces the reference exactly.
 
-    Input/out: TABLE_ROWS_SCHEMA-shaped flat rows (page_id preserved;
-    row_id renumbered per merged table). Accepts both the SQL path's
-    1-based row_id and the exact path's 0-based (header arity is read
-    from the lowest non-negative row_id, not a hardcoded row 1;
-    row_id=-1 empty-table markers are ignored for arity, stay -1 in
-    the output, and vanish when their merged group gains real rows).
-
-    The merge is a diamond over its input (a table-level aggregate
-    joined back onto the row stream), so without materialization the
-    whole upstream reconstruction pipeline executes twice.
-    `cache_input` persists the input first — it is output-sized (table
-    rows, not span rows), and in production this stage reads the
-    already-written tables table anyway; measured ~20% off the J3 wall
-    time locally.
+    Input/out: TABLE_ROWS_SCHEMA-shaped flat rows, one title per
+    (doc_id, page_id, table_id). Output table ids are 1-based in
+    document order; page_id is preserved and row_id renumbered 1.. per
+    merged table. Accepts both the SQL path's 1-based row_id and the
+    exact path's 0-based (header arity is read from the lowest
+    non-negative row_id). row_id=-1 empty-table markers are ignored
+    for arity and vanish when their merged table has real rows; a
+    merged table of markers only keeps exactly one. A table with a
+    NULL title is standalone and never an anchor.
     """
-    if cache_input:
-        tables = tables.persist()
-    # literal 'continued' ON PURPOSE, not the X7 (continued|cont\.)
-    # pattern: the reference's merge stage tests
-    # `'continued' in title.lower()` (parse_util.py:329) while only the
-    # fold stage uses the X7 regex (table_extractor.py:52) — a 'cont.'
-    # fragment genuinely does not merge on this route in the reference
-    is_cont = F.lower(F.col("title")).contains("continued")
-    base = F.when(
-        is_cont, F.trim(F.element_at(F.split(F.col("title"), r"\("), 1))
-    ).otherwise(F.col("title"))
-    t = tables.withColumn("is_cont", is_cont).withColumn("base_title", base)
+    schema = T.StructType([
+        tables.schema["doc_id"], tables.schema["page_id"],
+        T.StructField("table_id", T.IntegerType()),
+        T.StructField("title", T.StringType()),
+        T.StructField("row_id", T.IntegerType()),
+        tables.schema["cells"],
+    ])
 
-    # table-level frame ordered within doc; the header-row arity
-    # (n_cols) is computed inside this same aggregation — no extra
-    # full-row window pass
-    tbl = (
-        t.groupBy("doc_id", "page_id", "table_id", "title", "base_title",
-                  "is_cont")
-        .agg(
-            F.count("*").alias("nr"),
-            F.expr(
-                "min_by(size(cells), CASE WHEN row_id >= 0 "
-                "THEN row_id END)"
-            ).alias("n_cols"),
-        )
-        .withColumn(
-            "tord",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("page_id", "table_id")
-            ),
-        )
-    )
-    w_run = (
-        Window.partitionBy("doc_id").orderBy("tord")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    anchor = lambda c: F.last(  # noqa: E731 — three parallel fill-downs
-        F.when(~F.col("is_cont"), F.col(c)), ignorenulls=True
-    ).over(w_run)
-    tbl = (
-        tbl.withColumn("anchor_tord", anchor("tord"))
-        .withColumn("anchor_title", anchor("title"))
-        .withColumn("anchor_cols", anchor("n_cols"))
-    )
-    title_bad = F.col("is_cont") & (
-        F.col("anchor_tord").isNull()
-        | (F.lower(F.col("anchor_title")) != F.lower(F.col("base_title")))
-    )
-    tbl = tbl.withColumn("title_bad", title_bad).withColumn(
-        "first_bad",
-        F.min(F.when(F.col("title_bad"), F.col("tord"))).over(
-            Window.partitionBy("doc_id", "anchor_tord")
-        ),
-    )
-    title_ok = (
-        F.col("is_cont")
-        & ~F.col("title_bad")
-        & (F.col("first_bad").isNull()
-           | (F.col("tord") < F.col("first_bad")))
-    )
-    arity_ok = F.col("anchor_cols").eqNullSafe(F.col("n_cols"))
-    tbl = tbl.withColumn("merged", title_ok & arity_ok)
-    if drop_mismatched:
-        tbl = tbl.filter(~(title_ok & ~arity_ok))
-    tbl = (
-        tbl.withColumn(
-            "grp_tord",
-            F.when(F.col("merged"), F.col("anchor_tord"))
-            .otherwise(F.col("tord")),
-        )
-        .withColumn(
-            "out_title",
-            F.when(F.col("merged"), F.col("anchor_title"))
-            .otherwise(F.col("title")),
-        )
-        .withColumn(
-            "merged_id",
-            F.dense_rank().over(
-                Window.partitionBy("doc_id").orderBy("grp_tord")
-            ),
-        )
-    )
-    keyed = t.join(
-        tbl.select("doc_id", "page_id", "table_id", "merged_id",
-                   "out_title"),
-        ["doc_id", "page_id", "table_id"],
-    )
-    # row_id=-1 empty-table markers must stay markers: a marker in a
-    # merged group that gained real rows disappears (the table now has
-    # rows), a merged group that is ALL markers keeps exactly one
-    # (one empty table), and surviving markers keep row_id=-1 instead
-    # of being renumbered into a phantom row with NULL cells.
-    w_grp = Window.partitionBy("doc_id", "merged_id")
-    w_merged = Window.partitionBy("doc_id", "merged_id").orderBy(
-        "page_id", "table_id", "row_id"
-    )
-    keyed = keyed.withColumn(
-        "n_real", F.count(F.when(F.col("row_id") >= 0, 1)).over(w_grp)
-    ).filter((F.col("row_id") >= 0) | (F.col("n_real") == 0))
-    keyed = keyed.withColumn("rn", F.row_number().over(w_merged)).filter(
-        (F.col("row_id") >= 0) | (F.col("rn") == 1)
-    )
-    return keyed.withColumn(
-        "row_id",
-        F.when(F.col("row_id") < 0, F.lit(-1)).otherwise(F.col("rn")),
-    ).select(
-        "doc_id",
-        "page_id",
-        F.col("merged_id").alias("table_id"),
-        F.col("out_title").alias("title"),
-        "row_id",
-        "cells",
-    )
+    def merge_docs(pdf: pd.DataFrame, starts) -> pd.DataFrame:
+        lists = [pdf[c].tolist()
+                 for c in ("page_id", "table_id", "title", "row_id", "cells")]
+        out = [r for lo, hi in zip(starts[:-1], starts[1:])
+               for r in _merge_doc(*lists, lo, hi, drop_mismatched)]
+        # never empty: a document's first table always starts a group
+        take, tids, titles, rids = zip(*out)
+        take = list(take)
+        return pd.DataFrame({
+            "doc_id": pdf["doc_id"].to_numpy()[take],
+            "page_id": pdf["page_id"].to_numpy()[take],
+            "table_id": tids, "title": titles, "row_id": rids,
+            "cells": pdf["cells"].to_numpy()[take],
+        })
+
+    cols = [f.name for f in TABLE_ROWS_SCHEMA.fields]
+    return map_groups(tables.select(*cols), ["doc_id"],
+                      ["page_id", "table_id", "row_id"], merge_docs, schema)

@@ -64,9 +64,9 @@ def language_id(docs: DataFrame) -> DataFrame:
     replaces the relational plan's four exchanges (trigram groupBy,
     rank window, distance groupBy, pivot) with a zero-shuffle narrow
     projection; measured 5.3 -> 1.4 s at sf0.1. All-integer distances
-    and identical rank tie-breaks keep it row-for-row equal to
-    language_id_relational and the DuckDB twin (three independent
-    formulations, pinned by pytest + selfcheck).
+    and identical rank tie-breaks keep it row-for-row equal to the
+    pure-Python classifier and the relational DuckDB twin (pinned by
+    pytest + selfcheck).
     """
     import pandas as pd
 
@@ -95,71 +95,6 @@ def language_id(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=cols)
 
     return docs.select("doc_id", "text").mapInPandas(run, schema)
-
-
-def language_id_relational(docs: DataFrame) -> DataFrame:
-    """Relational twin of language_id (the formulation the DuckDB
-    oracle transliterates; kept as the in-repo cross-check the parity
-    test runs against the Python classifier).
-
-    Plan: normalize to padded lowercase letters -> explode trigrams
-    (same codegen explode shape as fingerprints) -> per-doc rank
-    window (count desc, trigram asc) capped at DOC_TOP -> broadcast
-    join against the 4 x PROFILE_TOP profile table -> per-(doc, lang)
-    integer out-of-place distance -> pivot + argmin with LANGS-order
-    tie-break. Docs too short for a trigram get distance 0 everywhere
-    -> 'en', like the Python reference. All-integer distances: the
-    DuckDB twin matches exactly, no rounding seam."""
-    from pdfspark.functions.langprof import DOC_TOP, LANGS, PENALTY, PROFILES
-
-    spark = docs.sparkSession
-    norm_letters = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), "[^a-z]+", " ")
-    )
-    base = docs.select(
-        "doc_id",
-        F.concat(F.lit(" "), norm_letters, F.lit(" ")).alias("p"),
-    )
-    tg = base.filter(F.length("p") >= 3).select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(1, length(p) - 2),"
-                   " i -> substring(p, i, 3))")
-        ).alias("tg"),
-    )
-    counts = tg.groupBy("doc_id", "tg").agg(F.count("*").alias("c"))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("c"), F.asc("tg"))
-    dprof = counts.withColumn("dr", F.row_number().over(w)).filter(
-        F.col("dr") <= DOC_TOP
-    )
-    prof = spark.createDataFrame(
-        [(lang, g, r) for lang in LANGS for g, r in PROFILES[lang].items()],
-        "lang string, tg string, pr int",
-    )
-    langs_df = spark.createDataFrame([(lg,) for lg in LANGS], "lang string")
-    per = (
-        dprof.crossJoin(F.broadcast(langs_df))
-        .join(F.broadcast(prof), ["lang", "tg"], "left")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum(
-                F.coalesce(F.abs(F.col("dr") - F.col("pr")),
-                           F.lit(PENALTY))
-            ).alias("dist")
-        )
-    )
-    piv = per.groupBy("doc_id").pivot("lang", LANGS).agg(F.first("dist"))
-    out = docs.select("doc_id").join(piv, "doc_id", "left")
-    dcols = {lg: F.coalesce(F.col(lg), F.lit(0)) for lg in LANGS}
-    best = F.least(*dcols.values())
-    pred = F.lit(None).cast("string")
-    for lg in reversed(LANGS):
-        pred = F.when(dcols[lg] == best, lg).otherwise(pred)
-    return out.select(
-        "doc_id",
-        pred.alias("pred_lang"),
-        *[dcols[lg].cast("bigint").alias(f"dist_{lg}") for lg in LANGS],
-    )
 
 
 def _quality_cols(text):
@@ -390,11 +325,11 @@ def curate_documents(
     the way a 100 TB pipeline chains them: exact-dedup keep-first
     (cheapest pass, runs first), then MinHash near-dedup over the
     exact survivors, then language filter, then quality filter.
-    Shapes: one hash shuffle for the dedup groupBy, a semi-join on the
-    keeper set, the banded star-candidate join of minhash_verified,
-    and two narrow per-row feature projections joined on doc_id — no
-    window, no cross joins; every filter is a deterministic predicate
-    over oracle-matched rounded features.
+    Shapes: one hash shuffle for the keep-first dedup window (min
+    doc_id per content hash), the banded star-candidate join of
+    minhash_verified, and two narrow per-row feature projections
+    joined on doc_id — no cross joins; every filter is a
+    deterministic predicate over oracle-matched rounded features.
 
     Near-dedup semantics (``near_dedup=True``): a doc is dropped iff
     it is the non-representative side (doc_b) of a Jaccard-verified
@@ -426,19 +361,21 @@ def curate_documents(
     identical. At sf0.1 this cuts the langid input ~4x; at 100 TB it
     is the difference between profiling the corpus and profiling the
     survivors."""
-    from pdfspark.operators.dedup import (
-        exact_duplicates, minhash_verified, neardup_components,
-    )
+    from pdfspark.operators.dedup import minhash_verified, neardup_components
 
-    keep = exact_duplicates(docs).select(
-        F.col("keeper_doc_id").alias("doc_id")
-    )
+    # exact-dedup keep-first in ONE pass over the input: a doc survives
+    # iff it is the min doc_id of its normalized-text hash group. The
+    # earlier keeper-set groupBy semi-joined back onto the docs was a
+    # diamond — both branches evaluated the (lazy, often fold-sized)
+    # input, so the upstream ran twice per call.
+    h = F.md5(normalized_text(F.col("text")))
+    first = F.min("doc_id").over(Window.partitionBy(h))
     # the exact-survivor frame feeds the near-dup pipeline (shingle
     # explode), the quality projection, AND the survivor assembly —
-    # checkpointed once so the dedup groupBy + semi-join run once, not
-    # once per consumer (measured 1.4 s of the td_curation flag at
-    # sf0.1; corpus-scan-sized at 100 TB). Non-eager: the first
-    # downstream action materializes it in-pass.
+    # checkpointed once so the dedup window runs once, not once per
+    # consumer (measured 1.4 s of the td_curation flag at sf0.1;
+    # corpus-scan-sized at 100 TB). Non-eager: the first downstream
+    # action materializes it in-pass.
     # localCheckpoint instead of persist throughout this operator: a
     # returned lazy frame has no "after the final action" hook to
     # unpersist at, and SQL-cache entries are never reclaimed by the
@@ -446,8 +383,9 @@ def curate_documents(
     # would pin executor storage forever. Local-checkpoint blocks ARE
     # GC-reclaimed once the returned frame becomes unreachable.
     uniq = (
-        docs.select("doc_id", "text")
-        .join(keep, "doc_id", "left_semi")
+        docs.select("doc_id", "text", first.alias("__first"))
+        .filter(F.col("doc_id") == F.col("__first"))
+        .drop("__first")
         .localCheckpoint(eager=False)
     )
     # quality is a per-row feature, so scoring the exact survivors

@@ -693,6 +693,82 @@ FROM events
 """
 
 
+def merge_tables_sql(src: str) -> str:
+    """J3 twin of tables.merge_continued_tables as a CTE chain over
+    ``src`` (TABLE_ROWS_SCHEMA-shaped rows), ending in
+    ``merged(doc_id, page_id, table_id, title, row_id, cells)``. It
+    does not model row_id=-1 empty-table markers: the SQL
+    reconstruction it checks drops empty tables, and the engine's
+    marker branch is pytest-pinned. The engine merges sequentially per document; this twin
+    is the same state machine made relational: the anchor of a
+    fragment is the last NON-continued table at or before it (the
+    reference's current_table stays the base after a merge, so
+    3+-page chains merge fully), and a title mismatch makes every
+    later fragment of the same anchor standalone."""
+    return f"""
+marked AS (
+  SELECT *,
+    contains(lower(title), 'continued') AS is_cont,
+    CASE WHEN contains(lower(title), 'continued')
+         THEN trim(split_part(title, '(', 1)) ELSE title END AS base_title
+  FROM {src}),
+tbllvl AS (
+  -- header arity from the lowest non-negative row_id (works for
+  -- 1-based SQL-path and 0-based exact-path row ids)
+  SELECT doc_id, page_id, table_id, title, base_title, is_cont,
+         arg_min(len(cells), CASE WHEN row_id >= 0 THEN row_id END) AS n_cols
+  FROM marked
+  GROUP BY doc_id, page_id, table_id, title, base_title, is_cont),
+orded AS (
+  SELECT *, row_number() OVER (PARTITION BY doc_id
+                               ORDER BY page_id, table_id) AS tord
+  FROM tbllvl),
+anch AS (
+  SELECT *,
+    last_value(CASE WHEN NOT is_cont THEN tord END IGNORE NULLS)
+      OVER wrun AS anchor_tord,
+    last_value(CASE WHEN NOT is_cont THEN title END IGNORE NULLS)
+      OVER wrun AS anchor_title,
+    last_value(CASE WHEN NOT is_cont THEN n_cols END IGNORE NULLS)
+      OVER wrun AS anchor_cols
+  FROM orded
+  WINDOW wrun AS (PARTITION BY doc_id ORDER BY tord
+                  ROWS UNBOUNDED PRECEDING)),
+badc AS (
+  SELECT *,
+    (is_cont AND (anchor_tord IS NULL
+                  OR lower(anchor_title) <> lower(base_title))) AS title_bad
+  FROM anch),
+grp AS (
+  SELECT *, min(CASE WHEN title_bad THEN tord END)
+              OVER (PARTITION BY doc_id, anchor_tord) AS first_bad
+  FROM badc),
+decided AS (
+  SELECT *,
+    (is_cont AND NOT title_bad
+     AND (first_bad IS NULL OR tord < first_bad)
+     AND anchor_cols IS NOT DISTINCT FROM n_cols) AS merged
+  FROM grp),
+mids AS (
+  SELECT *,
+    CASE WHEN merged THEN anchor_tord ELSE tord END AS grp_tord,
+    CASE WHEN merged THEN anchor_title ELSE title END AS out_title
+  FROM decided),
+dense AS (
+  SELECT *, dense_rank() OVER (PARTITION BY doc_id
+                               ORDER BY grp_tord) AS merged_id
+  FROM mids),
+merged AS (
+  SELECT m.doc_id, m.page_id, CAST(i.merged_id AS INT) AS table_id,
+         i.out_title AS title,
+         CAST(row_number() OVER (PARTITION BY m.doc_id, i.merged_id
+                                 ORDER BY m.page_id, m.table_id, m.row_id)
+              AS INT) AS row_id,
+         m.cells
+  FROM marked m JOIN dense i USING (doc_id, page_id, table_id))
+"""
+
+
 def tabular_pairs_sql(geom: str) -> str:
     same_row = "abs((a.y0+a.y1)/2 - (b.y0+b.y1)/2) <= 10.0"
     same_col = "abs((a.x0+a.x1)/2 - (b.x0+b.x1)/2) <= 20.0"

@@ -512,34 +512,6 @@ def test_sections_split_rows_equals_sequential(spark, documents_in,
     assert got == want
 
 
-def test_fold_arrow_twin_matches_pandas(spark, fixture_dir):
-    """The mapInArrow fold twin (kept as a measured negative result —
-    see _fold_batches_arrow docstring) must stay row-identical to the
-    production pandas fold, so the A/B can be rerun any time."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pdfspark.operators import extract as X
-
-    docs = spark.read.parquet(
-        os.path.join(fixture_dir, "documents_in.parquet"))
-    base = X._with_hf(docs, None).repartition(F.xxhash64("doc_id"))
-    cfg = X.ExtractConfig()
-    pd_rows = sorted(
-        (r.doc_id, r.status, [tuple(s) for s in r.spans])
-        for r in base.mapInPandas(
-            X._fold_batches(cfg, spans_only=True),
-            X.EXTRACT_SPANS_ONLY).collect())
-    ar_rows = sorted(
-        (r.doc_id, r.status, [tuple(s) for s in r.spans])
-        for r in base.mapInArrow(
-            X._fold_batches_arrow(cfg, spans_only=True),
-            X.EXTRACT_SPANS_ONLY).collect())
-    assert pd_rows == ar_rows
-    assert pd_rows
-
-
 def test_split_path_null_spans_and_null_toc_text_parity(spark):
     """Two ANSI NULL edges the skew path used to diverge on: a doc
     with spans=NULL (size(NULL) is NULL -> fell out of all three

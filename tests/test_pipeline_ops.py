@@ -354,6 +354,26 @@ def test_curation_near_dedup_is_keep_first_subset(docs_all):
     assert nd_b, "fixture should plant at least one verified near-dup"
 
 
+def test_curation_evaluates_input_once(spark, docs_all):
+    """curate_documents must read its input in ONE pass: the input is
+    lazy and, in production, fold-sized, so a diamond over it (two
+    branches of the same frame joined back together) runs the whole
+    upstream twice."""
+    from pdfspark.operators.textstats import curate_documents
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    n = docs_all.count()
+    curate_documents(docs_all.mapInPandas(count_rows, docs_all.schema)
+                     ).collect()
+    assert seen.value == n
+
+
 def test_dedup_deterministic_under_repartition(docs_all):
     base = sorted(
         (r.doc_a, r.doc_b, r.n_shared_bands)
@@ -894,27 +914,21 @@ def test_langid_holdout_accuracy():
 
 
 def test_langid_spark_equals_python_reference(spark):
-    """BOTH Spark forms — the production mapInPandas kernel and the
-    relational plan the DuckDB oracle transliterates — must equal the
-    pure-Python classifier row-for-row (pred + all four integer
-    distances), including the empty-text edge. The relational-vs-Python
-    leg is the independent cross-check; the mapInPandas leg pins schema
-    and NULL handling."""
+    """The production mapInPandas kernel must equal the pure-Python
+    classifier row-for-row (pred + all four integer distances),
+    including the empty-text edge; this pins schema and NULL handling.
+    The relational formulation is the DuckDB twin (ts_langid)."""
     from pdfspark.functions.langprof import LANGS, classify
-    from pdfspark.operators.textstats import language_id_relational
 
     rows = [(f"h-{i:02d}", s) for i, (_lg, s) in
             enumerate(HOLDOUT_SENTENCES)]
     rows += [("h-empty", ""), ("h-punct", "!!! 42 ???")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    for form in (language_id, language_id_relational):
-        got = {r.doc_id: (r.pred_lang, tuple(r[f"dist_{lg}"] for lg in LANGS))
-               for r in form(df).collect()}
-        for doc_id, text in rows:
-            pred, dists = classify(text)
-            assert got[doc_id] == (
-                pred, tuple(dists[lg] for lg in LANGS)
-            ), (form.__name__, doc_id)
+    got = {r.doc_id: (r.pred_lang, tuple(r[f"dist_{lg}"] for lg in LANGS))
+           for r in language_id(df).collect()}
+    for doc_id, text in rows:
+        pred, dists = classify(text)
+        assert got[doc_id] == (pred, tuple(dists[lg] for lg in LANGS)), doc_id
 
 
 def test_np_signature_bit_equals_hof(spark, emb_all):

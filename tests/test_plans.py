@@ -39,7 +39,7 @@ BNLJ_ALLOWED = {"j6_keyword_hits": 1}
 # dd_components: same class — the converged label frame is a
 # checkpoint scan joined to its own size aggregate.
 SMJ_ALLOWED = {
-    "td_curation": 2, "dd_components": 2,
+    "td_curation": 1, "dd_components": 2,
     # round 5: the W3 TOC-conditional rewrite joins the per-doc
     # matched-offset sets back onto the span stream on doc_id — the
     # same key the fill-down window partitions by, so the big side is
@@ -71,7 +71,9 @@ MAX_EXCHANGES = {
     # exchange is the second config's band/group stage, vs +3 for an
     # unshared union
     "dd_simhash_pairs": 6, "dd_components": 4, "ts_langid": 0,
-    "ts_text_profile": 0, "hm1_main_content": 0, "td_curation": 3,
+    # td_curation 3 -> 2: exact-dedup keep-first is one window over
+    # the content hash, not a keeper groupBy semi-joined back
+    "ts_text_profile": 0, "hm1_main_content": 0, "td_curation": 2,
     "sim_ann_topk": 1, "sim_ivf_topk": 2, "j5_topk_euclidean": 1,
     # sim_neardup_lsh 4 -> 5 (round 4): the star-candidate rewrite
     # adds the bucket-representative min-aggregate — one extra
@@ -85,11 +87,16 @@ MAX_EXCHANGES = {
     "s1_stream_extract": 0, "ep1_extract_spans": 5,
     "ep1_extract_spans_sql": 3, "ep1_extract_sections": 5,
     # w1 1 -> 2 (round 5): the dual-variant row unions the ref window
-    # (one exchange) with the XY-cut applyInPandas grouping (one
+    # (one exchange) with the XY-cut map_groups repartition (one
     # exchange on the same (doc_id, page_id) keys)
     "lineage_metrics": 5, "w1_reading_order": 2, "a1_header_footer": 5,
     "f10_f12_margins": 4, "a5_table_stats": 5, "ep3_tables_sql": 5,
-    "ep3_tables_doc_scope": 6, "j3_tables_merged": 14,
+    # j3 14 -> 6: the merge is one doc_id repartition + a sequential
+    # per-document pass (map_groups) instead of a table-level
+    # aggregate, five windows and a join back onto the rows.
+    # ep3_tables_exact audits 5 both as applyInPandas and as
+    # map_groups: header/footer (3), its broadcast, one page shuffle
+    "ep3_tables_doc_scope": 6, "j3_tables_merged": 6,
     "ep3_tables_exact": 5, "j2_table_titles": 14, "j4_toc_skeleton": 1,
     # x1/a8 5 -> 13, j1 11 -> 13 (round 5): the W3 TOC-conditional
     # rewrite adds the heading->TOC whole-word semi join and the
@@ -148,6 +155,19 @@ def test_filter_pushdown_reaches_scans(plans):
         and plans[n]["pushed"] == 0
     }
     assert not bad, f"pushdown missing at the scan: {bad}"
+
+
+# Per-group Python on the table path goes through map_groups (many
+# groups per Arrow batch), never one applyInPandas group per page.
+NO_GROUPED_PANDAS = {"ep3_tables_exact", "j3_tables_merged", "w1_reading_order"}
+
+
+def test_table_path_has_no_grouped_pandas(plans):
+    bad = {
+        n: plans[n]["py_grouped"] for n in NO_GROUPED_PANDAS
+        if not isinstance(plans[n], str) and plans[n]["py_grouped"]
+    }
+    assert not bad, f"FlatMapGroupsInPandas on the table path: {bad}"
 
 
 def test_exchange_counts_bounded(plans):

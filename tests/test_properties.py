@@ -379,3 +379,74 @@ def test_html_kernels_survive_mutated_markup(data):
             + base[i + 1:]
     assert isinstance(extract_blocks(doc), list)
     assert isinstance(parse_html_table(7, doc), list)
+
+
+# --- map_groups: groups are never split or reordered -----------------------
+
+def _map_groups_round_trip(spark, sizes, batch, rnd):
+    """Run groups of the given sizes through ``map_groups`` with tiny
+    Arrow batches and no partition coalescing (so most partitions of a
+    few groups are empty), and check that every kernel call saw whole
+    groups in ``order``. Group i has keys (i // 2, 'a'/'b'), group 0
+    a NULL second key."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from pdfspark.udf import map_groups
+
+    rows, expected = [], {}
+    for i, n in enumerate(sizes):
+        key = (i // 2, None if i == 0 else "ab"[i % 2])
+        vals = list(range(n))
+        rnd.shuffle(vals)
+        rows += [(*key, v) for v in vals]
+        expected[key] = list(range(n - 1, -1, -1))
+    df = spark.createDataFrame(rows, "g int, h string, o int")
+    schema = T.StructType([
+        T.StructField("g", T.IntegerType()),
+        T.StructField("h", T.StringType()),
+        T.StructField("seq", T.ArrayType(T.IntegerType())),
+    ])
+
+    def per_group(pdf, starts):
+        assert starts[0] == 0 and starts[-1] == len(pdf)
+        out = []
+        for lo, hi in zip(starts[:-1], starts[1:]):
+            assert hi > lo
+            part = pdf.iloc[lo:hi]
+            assert part["g"].nunique() == 1
+            assert part["h"].nunique(dropna=False) == 1
+            out.append((part["g"].iat[0], part["h"].iat[0],
+                        part["o"].tolist()))
+        return pd.DataFrame(out, columns=["g", "h", "seq"])
+
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": str(batch),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        got = [((r.g, r.h), list(r.seq)) for r in map_groups(
+            df, ["g", "h"], [F.desc("o")], per_group, schema).collect()]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(got) == len({k for k, _ in got}), "a group was split"
+    assert dict(got) == expected
+
+
+# Spark's gateway threads move the recursion limit under hypothesis
+@pytest.mark.filterwarnings("ignore:The recursion limit will not be reset")
+@given(st.lists(st.integers(1, 12), max_size=10), st.sampled_from([2, 3]),
+       st.randoms())
+@settings(max_examples=12, deadline=None)
+def test_map_groups_never_splits_or_reorders(spark, sizes, batch, rnd):
+    _map_groups_round_trip(spark, sizes, batch, rnd)
+
+
+def test_map_groups_group_longer_than_fifty_batches(spark):
+    import random
+
+    # group 1 spans 60+ batches of 3 rows; neighbours straddle its ends
+    _map_groups_round_trip(spark, [2, 185, 1, 4], 3, random.Random(7))

@@ -129,8 +129,7 @@ def test_merge_chain_three_pages(spark):
                                "Table 2: X (continued)"], start=1):
         for r in (1, 2):
             rows.append(("d1", p, 1, title, r, [f"a{p}{r}", f"b{p}{r}"]))
-    out = merge_continued_tables(_tables_frame(spark, rows),
-                                 cache_input=False).collect()
+    out = merge_continued_tables(_tables_frame(spark, rows)).collect()
     assert {r.table_id for r in out} == {1}
     assert {r.title for r in out} == {"Table 2: X"}
     assert sorted(r.row_id for r in out) == [1, 2, 3, 4, 5, 6]
@@ -150,8 +149,7 @@ def test_merge_state_machine_after_title_mismatch(spark):
         ("d2", 2, 1, "Table 9: Z (continued)", 1, ["c", "d"]),
         ("d2", 3, 1, "Table 1: Y (continued)", 1, ["e", "f"]),
     ]
-    out = merge_continued_tables(_tables_frame(spark, rows),
-                                 cache_input=False).collect()
+    out = merge_continued_tables(_tables_frame(spark, rows)).collect()
     assert len({r.table_id for r in out}) == 3  # nothing merged
 
 
@@ -165,12 +163,10 @@ def test_merge_arity_mismatch_keep_vs_drop(spark):
         ("d3", 1, 1, "Table 4: Mixed", 1, ["a", "b"]),
         ("d3", 2, 1, "Table 4: Mixed (continued)", 1, ["c", "d", "e"]),
     ]
-    keep = merge_continued_tables(_tables_frame(spark, rows),
-                                  cache_input=False).collect()
+    keep = merge_continued_tables(_tables_frame(spark, rows)).collect()
     assert len({r.table_id for r in keep}) == 2
     assert any("(continued)" in r.title for r in keep)
     drop = merge_continued_tables(_tables_frame(spark, rows),
-                                  cache_input=False,
                                   drop_mismatched=True).collect()
     assert len(drop) == 1 and drop[0].title == "Table 4: Mixed"
 
@@ -186,8 +182,7 @@ def test_merge_zero_based_row_ids(spark):
         ("d4", 1, 1, "Table 7: Z", 1, ["c", "d"]),
         ("d4", 2, 1, "Table 7: Z (continued)", 0, ["e", "f"]),
     ]
-    out = merge_continued_tables(_tables_frame(spark, rows),
-                                 cache_input=False).collect()
+    out = merge_continued_tables(_tables_frame(spark, rows)).collect()
     assert {r.table_id for r in out} == {1}
     assert {r.title for r in out} == {"Table 7: Z"}
     assert len(out) == 3
@@ -214,8 +209,7 @@ def test_merge_preserves_empty_table_markers(spark):
         ("d5", 4, 1, "Table 3: C", -1, None),
         ("d5", 5, 1, "Table 3: C (continued)", -1, None),
     ]
-    out = merge_continued_tables(_tables_frame(spark, rows),
-                                 cache_input=False).collect()
+    out = merge_continued_tables(_tables_frame(spark, rows)).collect()
     by_title = {}
     for r in out:
         by_title.setdefault(r.title, []).append(r)
@@ -232,6 +226,61 @@ def test_merge_preserves_empty_table_markers(spark):
     assert [(r.row_id, r.cells) for r in t3] == [(-1, None)]
     # no phantom rows anywhere: every non-marker row has cells
     assert all(r.cells is not None for r in out if r.row_id >= 0)
+
+
+def _random_tables(rnd, n_docs):
+    """Random TABLE_ROWS_SCHEMA rows without row_id=-1 markers or NULL
+    cells: chains of '(continued)' fragments with matching, mismatched
+    and case-shifted bases, '(cont.)' fragments, several tables per
+    page, 0- and 1-based row ids, and header arities that may differ."""
+    bases = ["Table 1: A", "Table 2: B", "TABLE 2: b", "Table 3: C"]
+    rows = []
+    for d in range(n_docs):
+        page, tid = 1, 0
+        for _ in range(rnd.randint(1, 7)):
+            if rnd.random() < 0.6:
+                page, tid = page + 1, 0
+            tid += 1
+            base = rnd.choice(bases)
+            title = rnd.choice([base, base, f"{base} (continued)",
+                                f"{base} (Continued)", f"{base} (cont.)"])
+            width = rnd.randint(1, 3)
+            first = rnd.randint(0, 1)
+            for r in range(first, first + rnd.randint(1, 3)):
+                n = width if rnd.random() < 0.8 else rnd.randint(1, 3)
+                rows.append((f"d{d}", page, tid, title, r,
+                             [f"{d}.{page}.{tid}.{r}.{c}" for c in range(n)]))
+    return rows
+
+
+def test_merge_matches_duckdb_twin_on_random_tables(spark):
+    """The sequential per-document merge equals the relational DuckDB
+    twin (oracle_pipeline.merge_tables_sql) row for row. The twin does
+    not model -1 markers; test_merge_preserves_empty_table_markers
+    covers those."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    from pdfspark.oracle_pipeline import merge_tables_sql
+
+    rows = _random_tables(random.Random(20261017), 300)
+    got = sorted(
+        (r.doc_id, r.page_id, r.table_id, r.title, r.row_id, tuple(r.cells))
+        for r in merge_continued_tables(_tables_frame(spark, rows)).collect()
+    )
+    con = duckdb.connect()
+    con.register("src", pd.DataFrame(rows, columns=[
+        "doc_id", "page_id", "table_id", "title", "row_id", "cells"]))
+    want = sorted(
+        (d, p, t, ti, r, tuple(c)) for d, p, t, ti, r, c in con.sql(
+            f"WITH {merge_tables_sql('src')} SELECT * FROM merged"
+        ).fetchall()
+    )
+    assert got == want
+    assert len({(r[0], r[2]) for r in got}) < len(
+        {(r[0], r[1], r[2]) for r in rows}), "nothing merged"
 
 
 def test_fold_tables_page_null_text_box():

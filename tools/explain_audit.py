@@ -30,6 +30,7 @@ def plan_summary(plan: str) -> dict:
         "exch": plan.count("Exchange"),
         "pyarrow": plan.count("MapInPandas")
         + plan.count("FlatMapGroupsInPandas"),
+        "py_grouped": plan.count("FlatMapGroupsInPandas"),
         "pushed": sum(
             1
             for ln in plan.splitlines()
